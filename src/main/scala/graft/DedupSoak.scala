@@ -91,7 +91,7 @@ object DedupSoak {
       s"occupancy cap dropped $dropped banded rows — collapse failed to absorb")
 
     val t1 = System.nanoTime()
-    val comps = Dedup.componentsStar(repPairsP.select("id_a", "id_b"))
+    val comps = Dedup.components(repPairsP.select("id_a", "id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = comps.groupBy("comp").count()
       .groupBy("count").agg(count(lit(1)).as("n"))

@@ -503,12 +503,9 @@ object SparkEntry {
     // keep-one-per-cluster over the FULL corpus. The oracle recomputes the
     // pair graph from scratch (brute-force Jaccard, like q26) and the
     // transitive closure with a recursive CTE, so both the pair recall AND
-    // the label-propagation fixpoint are graded against ground truth
+    // the star-contraction fixpoint are graded against ground truth
     // computed in collapsed form (components over the representative graph
-    // + member-map join) — byte-identical to the expanded
-    // nearDupKeepers(minhashLshPairs(...)) per the nearDupKeepersCollapsed
-    // equivalence argument, pinned in DedupSpec; the within-group pair
-    // expansion never materializes
+    // + member-map join); the within-group pair expansion never materializes
     "q59_dedup_components" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val (repPairs, members) =
@@ -517,22 +514,20 @@ object SparkEntry {
         repPairs, members)
     }),
 
-    // same resolution through the diameter-proof star-contraction labeler
-    // (Kiveris et al. SoCC 2014) — identical ground-truth oracle, so BOTH
-    // component algorithms are driver-graded, not just spec'd
+    // the same resolution in EXPANDED form (every within-group pair, no
+    // member map) against the identical ground-truth oracle: q59 ≡ q60 is
+    // the collapsed ≡ expanded equivalence of nearDupKeepersCollapsed,
+    // oracle-graded here and spec'd in TrainingOpsSpec
     "q60_components_star" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val (repPairs, members) =
-        graft.operators.Dedup.minhashLshPairsCollapsed(docs, "doc_id", "text")
-      graft.operators.Dedup.nearDupKeepersCollapsed(docs, "doc_id",
-        repPairs, members,
-        algo = graft.operators.Dedup.componentsStar(_, _, _))
+      graft.operators.Dedup.nearDupKeepers(docs, "doc_id",
+        graft.operators.Dedup.minhashLshPairs(docs, "doc_id", "text"))
     }),
 
-    // the DURABLE fixpoint variant through the same ground-truth closure:
-    // identical contract to q60, but every contraction round commits as an
-    // atomic snapshot and the labeler resumes from durable state (the state
-    // table is reset per run so the driver grades a full fixpoint)
+    // the DURABLE generation store through the same ground-truth closure:
+    // every contraction round commits as an atomic snapshot and the labeler
+    // resumes from durable state (the state table is reset per run so the
+    // oracle grades a full fixpoint)
     "q67_components_resumable" -> ((s, d) => {
       val root = s"${SmokeWorld.auxDir}/tmp_star_state"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -540,8 +535,7 @@ object SparkEntry {
       val (repPairs, members) =
         graft.operators.Dedup.minhashLshPairsCollapsed(docs, "doc_id", "text")
       graft.operators.Dedup.nearDupKeepersCollapsed(docs, "doc_id",
-        repPairs, members,
-        algo = graft.operators.Dedup.componentsStarResumable(_, root, _, _))
+        repPairs, members, graft.operators.Dedup.Store.Durable(root))
     }),
 
     // html → text extraction (north-star invariant: byte-identical extracted
@@ -1891,7 +1885,7 @@ object SparkEntry {
 
     // ground-truth cluster grading: pairs from brute-force Jaccard (q26's
     // oracle CTE), components as the transitive closure via recursive CTE
-    // — Spark's LSH pair recall and hash-min fixpoint must both agree
+    // — Spark's LSH pair recall and star-contraction fixpoint must both agree
     "q59_dedup_components" ->
       """WITH RECURSIVE s AS (SELECT doc_id, list_distinct(
         |   [substr(text, CAST(i AS INT), 5) for i in range(1, greatest(length(text)-4,1)+1)]) AS sh
@@ -1910,8 +1904,8 @@ object SparkEntry {
         |SELECT id AS doc_id, min(reach) AS comp, (min(reach) = id) AS keeper
         |FROM r GROUP BY id""".stripMargin,
 
-    // star contraction must reach the same fixpoint as hash-min: same
-    // ground-truth closure grades both labelers
+    // the expanded pair form must reach the same labels as the collapsed
+    // form: the same ground-truth closure grades both
     "q60_components_star" ->
       """WITH RECURSIVE s AS (SELECT doc_id, list_distinct(
         |   [substr(text, CAST(i AS INT), 5) for i in range(1, greatest(length(text)-4,1)+1)]) AS sh
@@ -1930,7 +1924,7 @@ object SparkEntry {
         |SELECT id AS doc_id, min(reach) AS comp, (min(reach) = id) AS keeper
         |FROM r GROUP BY id""".stripMargin,
 
-    // identical ground truth for the durable-fixpoint labeler
+    // identical ground truth for the durable generation store
     "q67_components_resumable" ->
       """WITH RECURSIVE s AS (SELECT doc_id, list_distinct(
         |   [substr(text, CAST(i AS INT), 5) for i in range(1, greatest(length(text)-4,1)+1)]) AS sh

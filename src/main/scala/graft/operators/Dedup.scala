@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.SnapTable
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 /**
  * Document deduplication operators for large-scale training-data pipelines:
@@ -52,23 +54,6 @@ object Dedup {
       s"ws -> array_sort(array_distinct(transform(" +
       s"sequence(1, greatest(size(ws) - ${n - 1}, 1)), " +
       s"i -> array_join(slice(ws, i, $n), ' '))))), 1)")
-
-  /** MinHash signature: numHashes mins of xxhash64(shingle, i).
-    * (Array-column form; the pair pipeline below uses the explode+aggregate
-    * form instead — higher-order functions are interpreted, a 64-expression
-    * min aggregate over exploded shingles is whole-stage codegen'd.) */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map(i =>
-      array_min(transform(shingles, s => xxhash64(s, lit(i))))): _*)
-
-  /** LSH band keys: one hash per band of `rowsPerBand` signature values. */
-  def lshBands(sig: Column, numHashes: Int, rowsPerBand: Int): Column = {
-    val bands = numHashes / rowsPerBand
-    array((0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => sig.getItem(b * rowsPerBand + r))
-      xxhash64((parts :+ lit(b)): _*)
-    }: _*)
-  }
 
   /** Exact Jaccard of two pre-distinct shingle arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -534,119 +519,140 @@ object Dedup {
   }
 
   /**
+   * Where [[components]] keeps each edge generation — the one choice its
+   * callers differ on.
+   *
+   *  - [[Store.Local]]: an eager `localCheckpoint` per generation, the
+   *    superseded one released as soon as the next is materialized. The
+   *    blocks die with the executors, so a driver death reruns the job.
+   *  - [[Store.Durable]]: every generation lands as one atomic
+   *    [[graft.sources.SnapTable]] snapshot under `root`, with
+   *    (round, edges, converged) in the manifest summary, atomic with the
+   *    file list. A call resumes from the newest generation, so a driver
+   *    death at round k restarts at round k, not round 0; snapshot history
+   *    audits the contraction (time travel reads any round's edge set until
+   *    expiry). `roundsThisRun` bounds the rounds one call executes: a
+   *    production driver loops `while (!store.converged(spark)) ...` over
+   *    whatever lease windows it gets, and specs use it to crash per round.
+   */
+  sealed trait Store {
+    /** Materialize generation `round`: the kept copy, and whether it is in
+      * star form ([[isStarForm]]). */
+    private[Dedup] def keep(edges: DataFrame, round: Int): (DataFrame, Boolean)
+    /** Drop a superseded generation (nothing reads it any more). */
+    private[Dedup] def release(edges: DataFrame): Unit = ()
+    /** The newest kept generation as (edges, round, star form), if any. */
+    private[Dedup] def resume(spark: SparkSession): Option[(DataFrame, Int, Boolean)] = None
+    private[Dedup] def roundBudget: Int = Int.MaxValue
+  }
+
+  object Store {
+    case object Local extends Store {
+      private[Dedup] def keep(edges: DataFrame, round: Int): (DataFrame, Boolean) = {
+        val g = edges.localCheckpoint(true)
+        (g, isStarForm(g))
+      }
+      override private[Dedup] def release(edges: DataFrame): Unit =
+        Shim.unpersistLocalCheckpoint(edges)
+    }
+
+    final case class Durable(root: String, roundsThisRun: Int = Int.MaxValue)
+        extends Store {
+      /** True when the newest generation under `root` is the final one. */
+      def converged(spark: SparkSession): Boolean = summary(spark).exists(_._3)
+
+      private def summary(spark: SparkSession): Option[(Int, Long, Boolean)] =
+        SnapTable.currentVersion(spark, root).map(v =>
+          parseStarSummary(SnapTable.manifest(spark, root, v).summary))
+
+      override private[Dedup] def resume(spark: SparkSession) =
+        summary(spark).map { case (round, _, star) =>
+          (SnapTable.scan(spark, root), round, star) }
+
+      // the durable write IS the generation's materialization: stage the
+      // data files (their per-file row counts give the edge count for
+      // free), run the star test on the staged files, then publish the
+      // manifest with the result. A crash between stage and publish orphans
+      // invisible files, exactly like a crash inside SnapTable.commit.
+      private[Dedup] def keep(edges: DataFrame, round: Int): (DataFrame, Boolean) = {
+        val spark = edges.sparkSession
+        val files = SnapTable.stage(edges, root)
+        val star = files.isEmpty || isStarForm(
+          spark.read.schema(edges.schema).parquet(files.map(_.path): _*))
+        SnapTable.publish(spark, root, "overwrite", edges.schema.toDDL, files,
+          summary = starSummary(round, files.map(_.rows).sum, star))
+        (SnapTable.scan(spark, root), star)
+      }
+
+      override private[Dedup] def roundBudget: Int = roundsThisRun
+    }
+  }
+
+  /**
    * Connected components over an undirected pair graph — the cluster-
    * resolution step every near-dup pipeline needs between "pairs found"
    * and "keep one document per duplicate cluster" (pair output alone
    * over-deletes: A~B and B~C must land in ONE cluster even when A~C was
    * never emitted).
    *
-   * Algorithm: hash-min label propagation — label(v) starts at v and each
-   * round takes the min over v's neighborhood's labels, to fixpoint.
-   * Rounds = graph diameter; LSH/SimHash pair graphs are unions of
-   * quasi-cliques (bucket co-membership), so diameters stay small even at
-   * web scale. For adversarially long chains the published escalation is
-   * two-phase star contraction (Kiveris et al., "Connected Components in
-   * MapReduce and Beyond", SoCC 2014, O(log²n) rounds); not needed for the
-   * dedup-cluster shape this serves.
-   *
-   * Scale shape: per round, one equi-join of the (2|E|)-row edge table
-   * (pre-partitioned on `src` once, reused every round) against the |V|-row
-   * label table plus one min-aggregation — no driver-side graph, no
-   * collect. Lineage is truncated every round with an eager
-   * `localCheckpoint` (the standard Spark iterative-algorithm discipline;
-   * without it round k's plan embeds rounds 1..k-1 and the optimizer
-   * re-walks an exponentially growing tree).
-   *
-   * Output: (id, comp) for every id present in `pairs`, comp = min id of
-   * the component. Ids absent from `pairs` are singletons — callers that
-   * need them use [[nearDupKeepers]], which left-joins the full corpus.
-   */
-  def components(pairs0: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIters: Int = 50): DataFrame = {
-    // evaluate the caller's pair pipeline ONCE (both union branches below
-    // would otherwise re-run it inside the edge materialization job)
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
-    // one exchange: hash(src) both co-locates the per-round join key and
-    // satisfies the dedup's ClusteredDistribution(src, dst) — the r5 shape
-    // paid a distinct-shuffle AND a repartition-shuffle here
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .repartition(col("src"))
-      .dropDuplicates("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // round 1 folded into initialization: comp₁(v) = min(v, min direct
-    // neighbor) — exactly what one propagation from comp₀ = id computes, at
-    // the cost of one aggregation instead of a full round + change probe
-    var labels = edges.groupBy("src").agg(min("dst").as("__mn"))
-      .select(col("src").as("id"), least(col("src"), col("__mn")).as("comp"))
-      .localCheckpoint(true)
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIters) {
-      // one propagation = min of the neighborhood labels, partial-aggregated
-      // map-side; the change flag rides INSIDE the checkpointed generation so
-      // the convergence probe is a scan of materialized blocks, not a second
-      // join of two label generations (which cost one extra shuffle per
-      // round in the r5 shape)
-      val lbl = labels.select(col("id").as("src"), col("comp"))
-      val pm = edges.join(lbl, "src")
-        .groupBy("dst").agg(min("comp").as("__p"))
-      val next = labels
-        .join(pm.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("__p"), col("comp"))).as("comp"),
-          coalesce(col("__p") < col("comp"), lit(false)).as("__chg"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("__chg")).limit(1).count()
-      // generation k is materialized and probed — release k−1's blocks
-      org.apache.spark.sql.graftshim.Shim.unpersistLocalCheckpoint(labels)
-      labels = next
-      converged = changed == 0L
-      iter += 1
-    }
-    if (!converged)
-      log.warn(s"components: no fixpoint after $maxIters rounds — graph " +
-        s"diameter exceeds the near-dup cluster shape; labels are an " +
-        s"upper-bound partition (over-split, never merged wrongly). " +
-        s"Use componentsStar for high-diameter graphs.")
-    edges.unpersist()
-    labels.select("id", "comp")
-  }
-
-  /**
-   * Connected components by alternating star contraction — the O(log²n)-
-   * round escalation for graphs whose diameter defeats per-round label
-   * propagation (adversarially long chains; [[components]] needs diameter
-   * rounds, this needs ~log² rounds regardless of shape). Clean-room
-   * implementation of the two-phase algorithm of Kiveris, Lattanzi,
-   * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce
-   * and Beyond" (ACM SoCC 2014): each round rewires the edge set itself
-   * rather than propagating labels across it —
+   * Algorithm: alternating star contraction, a clean-room implementation of
+   * Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected
+   * Components in MapReduce and Beyond" (ACM SoCC 2014). Each round rewires
+   * the edge set itself instead of propagating labels across it, so it
+   * needs O(log²n) rounds whatever the graph's diameter (label propagation
+   * needs diameter-many, which an adversarial chain makes |V|):
    *
    *  - large-star: every node connects its strictly-larger neighbors to
    *    the minimum of its closed neighborhood;
    *  - small-star: with edges directed larger→smaller, every node collapses
    *    its smaller neighbors (and itself) onto their minimum.
    *
-   * Both halves are one groupBy-min plus one equi-join over the edge table
-   * — no driver-side graph, no collect; lineage truncated per round with an
-   * eager localCheckpoint like [[components]]. At fixpoint the edge set is
-   * a union of stars centered on each component's min id, which reads out
-   * as the (id, comp) label table directly. Ordering only needs a total
-   * order on ids, so string ids work (lexicographic min becomes the
-   * representative).
+   * Both halves are one groupBy-min plus one equi-join over the edge table —
+   * no driver-side graph, no collect. The loop stops as soon as the CURRENT
+   * generation is a union of min-rooted stars ([[isStarForm]]): that is
+   * exactly the shape the (id, comp) readout needs, so no round runs after
+   * the answer is known, and the readout needs nothing but the final edges.
+   * `store` keeps one generation per round (lineage truncated, and the
+   * caller's pair pipeline evaluated once, inside generation 0).
    *
-   * Output: (id, comp) for every id present in `pairs` — same contract as
-   * [[components]]; singletons are the caller's left-join (see
-   * [[nearDupKeepers]]).
+   * Output: (id, comp) for every id in a non-self pair of `pairs`, comp =
+   * min id of the component. Ordering only needs a total order on ids, so
+   * string ids work (lexicographic min becomes the representative). Other
+   * ids are singletons — callers that need them use [[nearDupKeepers]],
+   * which left-joins the full corpus. Past `maxIters` rounds without star
+   * form (or a durable call out of `roundsThisRun`), the labels are an
+   * upper-bound partition: over-split, never merged wrongly.
    */
-  // canonical edge form shared by the star-contraction variants:
-  // u > v, no self-loops, distinct. The dedup is clustered by u ALONE
-  // (hash(u) satisfies ClusteredDistribution(u, v), so dropDuplicates adds
-  // no second exchange) — the output arrives hash-partitioned on u, which
-  // the small-star half consumes directly (groupBy(u) + join on u, zero
-  // further exchanges). u is the NON-root end of every canonical edge, so
-  // the u-hash spreads; the hot key of a contracting graph is the root v.
+  def components(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
+      maxIters: Int = 50, store: Store = Store.Local): DataFrame = {
+    var (edges, round, star) = store.resume(pairs.sparkSession).getOrElse {
+      val (e0, s0) =
+        store.keep(canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v"))), 0)
+      (e0, 0, s0)
+    }
+    var executed = 0
+    while (!star && round < maxIters && executed < store.roundBudget) {
+      val (next, s) = store.keep(starRound(edges), round + 1)
+      // the one release point: generation k is materialized and tested
+      store.release(edges)
+      edges = next
+      star = s
+      round += 1
+      executed += 1
+    }
+    if (!star && round >= maxIters)
+      log.warn(s"components: no star form after $maxIters rounds — labels " +
+        "are an upper-bound partition (over-split, never merged wrongly)")
+    starLabels(edges, star)
+  }
+
+  // canonical edge form: u > v, no self-loops, distinct. The dedup is
+  // clustered by u ALONE (hash(u) satisfies ClusteredDistribution(u, v), so
+  // dropDuplicates adds no second exchange) — the output arrives
+  // hash-partitioned on u, which the small-star half consumes directly
+  // (groupBy(u) + join on u, zero further exchanges). u is
+  // the NON-root end of every canonical edge, so the u-hash spreads; the hot
+  // key of a contracting graph is the root v.
   private def canonStar(e: DataFrame): DataFrame = e
     .filter(col("u") =!= col("v"))
     .select(greatest(col("u"), col("v")).as("u"),
@@ -658,8 +664,7 @@ object Dedup {
     * canonical edge set; returns the next canonical generation.
     * Exchange budget: ONE shuffle of nbrs (hash(x), reused by both the
     * min-aggregation and the neighborhood join) + the two canonStar
-    * repartitions — the r5 shape paid six (each groupBy/join/distinct
-    * re-shuffled its own input). */
+    * repartitions. */
   private def starRound(edges: DataFrame): DataFrame = {
     // large-star: neighborhoods from both directions; m = min(N(x) ∪ {x});
     // emit (n, m) for the strictly-larger neighbors n > x. One explicit
@@ -684,132 +689,29 @@ object Dedup {
         .union(smins.select(col("u"), col("m").as("v"))))
   }
 
-  /** Fixpoint-edge readout: at fixpoint the edge set is a union of stars
-    * (nonRoot > root); roots label themselves. */
-  private def starLabels(ids: DataFrame, edges: DataFrame): DataFrame =
-    ids.join(edges.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
-      .groupBy("id").agg(min(coalesce(col("comp"), col("id"))).as("comp"))
-
-  def componentsStar(pairs0: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIters: Int = 30): DataFrame = {
-    // evaluate the caller's pair pipeline ONCE (it is typically the full
-    // LSH candidate/verify chain); ids and the round-0 edge set both
-    // derive narrowly from the checkpointed copy
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
-    val ids = pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id"))).distinct()
-    var edges = canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
-      .localCheckpoint(true)
-    // count carried across rounds: both generations are canonical (distinct)
-    // sets, so equal counts + an empty one-sided anti-join probe proves set
-    // equality — one tiny job per round instead of isEmpty + two exceptAll
-    // scans, and the probe itself only runs on rounds where the counts match
-    var edgeCount = edges.count()
-    var iter = 0
-    var converged = edgeCount == 0L
-    while (!converged && iter < maxIters) {
-      val small = starRound(edges).localCheckpoint(true)
-      val smallCount = small.count()
-      converged = smallCount == edgeCount &&
-        small.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      // generation k is materialized and probed — release k−1's blocks
-      org.apache.spark.sql.graftshim.Shim.unpersistLocalCheckpoint(edges)
-      edges = small
-      edgeCount = smallCount
-      iter += 1
-    }
-    if (!converged && edgeCount > 0L)
-      log.warn(s"componentsStar: no fixpoint after $maxIters rounds " +
-        s"(log²-round bound exceeded — should not happen below ~2^${maxIters / 6} nodes)")
-    starLabels(ids, edges)
+  /** Star-form certificate for a canonical generation: every u has one v
+    * and no v is also a u. Then each component is one star whose root v is
+    * its min id, so (u → v) plus (v → v) is its final labeling. One
+    * limit(1) job over a partial-aggregated groupBy(u) unioned with one
+    * semi-join (a kept generation's scan reports no partitioning, so the
+    * groupBy shuffles its (u, count) partials). */
+  private def isStarForm(edges: DataFrame): Boolean = {
+    val forked = edges.groupBy("u").count().filter(col("count") > 1)
+      .select(col("u").as("x"))
+    val inner = edges.select(col("v").as("x"))
+      .join(edges.select(col("u").as("x")), Seq("x"), "left_semi")
+    forked.union(inner).limit(1).count() == 0L
   }
 
-  /**
-   * [[componentsStar]] with a DURABLE fixpoint: every contraction round
-   * lands the next edge generation as one atomic
-   * [[graft.sources.SnapTable]] snapshot under `stateRoot`, with
-   * (round, edge count, converged) carried in the manifest's operation
-   * string. A driver death at round k resumes at round k — not round 0 —
-   * which is the difference between restarting a 10^12-edge job and
-   * finishing it: per-round generations there are hours of shuffle, and
-   * [[componentsStar]]'s localCheckpoint generations die with the
-   * executors. Snapshot history doubles as an audit trail (time-travel
-   * reads any round's edge set until expiry).
-   *
-   * The contraction is deterministic (min-based, partitioning-independent),
-   * so resumed and uninterrupted runs converge to identical labels — the
-   * same invariant the streaming kill+resume and tile-converter ledgers
-   * pin. `roundsThisRun` bounds the rounds THIS call executes (a production
-   * driver loops `while (!componentsStarConverged(...)) ...` in whatever
-   * lease windows it gets; specs use it to simulate a crash per round).
-   * Returns the label readout of the newest durable generation — final
-   * exactly when [[componentsStarConverged]] reports true.
-   */
-  def componentsStarResumable(pairs0: DataFrame, stateRoot: String,
-      aCol: String = "id_a", bCol: String = "id_b",
-      maxIters: Int = 30, roundsThisRun: Int = Int.MaxValue): DataFrame = {
-    import graft.sources.SnapTable
-    val spark = pairs0.sparkSession
-    // one evaluation of the caller's pair pipeline, as in [[componentsStar]]
-    val pairs = pairs0.select(col(aCol), col(bCol)).localCheckpoint(true)
-    val ids = pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id"))).distinct()
-    // resume point: the newest durable generation (its round state rides in
-    // the manifest summary, atomic with the file list), else round 0 built
-    // from the pairs
-    var (edges, edgeCount, round, converged) =
-      SnapTable.currentVersion(spark, stateRoot) match {
-        case Some(v) =>
-          val st = parseStarSummary(SnapTable.manifest(spark, stateRoot, v).summary)
-          (SnapTable.scan(spark, stateRoot), st._2, st._1, st._3)
-        case None =>
-          val e0 = canonStar(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
-          val files = SnapTable.stage(e0, stateRoot)
-          val n0 = files.map(_.rows).sum
-          val c0 = n0 == 0L
-          SnapTable.publish(spark, stateRoot, "overwrite", e0.schema.toDDL,
-            files, summary = starSummary(0, n0, c0))
-          (SnapTable.scan(spark, stateRoot), n0, 0, c0)
-      }
-    var executed = 0
-    while (!converged && round < maxIters && executed < roundsThisRun) {
-      // the durable write IS the round's materialization: stage the next
-      // generation's data files (one write job + one stats pass whose
-      // per-file row counts give the edge count for free), probe
-      // convergence against the staged files, then publish the manifest
-      // with the final (round, count, converged) summary. The r5 shape
-      // paid an extra localCheckpoint + count() materialization per round
-      // on top of the same parquet write; a crash between stage and
-      // publish orphans invisible files — identical recovery semantics.
-      val next = starRound(edges)
-      val files = SnapTable.stage(next, stateRoot)
-      val nextCount = files.map(_.rows).sum
-      val staged =
-        if (files.isEmpty) next.limit(0)
-        else spark.read.schema(next.schema).parquet(files.map(_.path): _*)
-      // probe against the CURRENT durable generation before replacing it
-      // (same count-carry + one-sided anti-join proof as componentsStar)
-      converged = nextCount == edgeCount &&
-        staged.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      round += 1
-      SnapTable.publish(spark, stateRoot, "overwrite", next.schema.toDDL,
-        files, summary = starSummary(round, nextCount, converged))
-      edges = SnapTable.scan(spark, stateRoot)
-      edgeCount = nextCount
-      executed += 1
-    }
-    if (!converged && edgeCount > 0L && round >= maxIters)
-      log.warn(s"componentsStarResumable: no fixpoint after $maxIters rounds")
-    starLabels(ids, edges)
+  /** Labels from the final edges alone: (u → v) plus (v → v) for each
+    * distinct root. Outside star form a node may carry several candidate
+    * labels (all in its component); the min keeps the partition sound. */
+  private def starLabels(edges: DataFrame, star: Boolean): DataFrame = {
+    val labels = edges.select(col("u").as("id"), col("v").as("comp"))
+      .union(edges.select(col("v").as("id")).distinct()
+        .select(col("id"), col("id").as("comp")))
+    if (star) labels else labels.groupBy("id").agg(min("comp").as("comp"))
   }
-
-  /** True when the durable fixpoint under `stateRoot` has converged. */
-  def componentsStarConverged(spark: org.apache.spark.sql.SparkSession,
-      stateRoot: String): Boolean =
-    graft.sources.SnapTable.currentVersion(spark, stateRoot).exists { v =>
-      parseStarSummary(
-        graft.sources.SnapTable.manifest(spark, stateRoot, v).summary)._3
-    }
 
   private def starSummary(round: Int, edges: Long, converged: Boolean): String =
     s"star round=$round edges=$edges converged=$converged"
@@ -819,7 +721,7 @@ object Dedup {
       .findFirstMatchIn(s)
       .map(g => (g.group(1).toInt, g.group(2).toLong, g.group(3).toBoolean))
       .getOrElse(throw new IllegalArgumentException(
-        s"not a componentsStarResumable state table (summary: '$s')"))
+        s"not a components state table (summary: '$s')"))
 
   /**
    * Keep-one-per-cluster resolution over the full corpus: every document
@@ -827,15 +729,10 @@ object Dedup {
    * and a `keeper` flag marking the component's min-id representative —
    * the row a training-data pipeline retains. One broadcast-or-shuffle
    * left join of the corpus against the (small) pair-node label table.
-   * `algo` picks the component labeler: [[components]] (default — right
-   * for the quasi-clique near-dup shape) or [[componentsStar]] (diameter-
-   * proof); both emit the identical (id, comp=min-id) contract.
    */
   def nearDupKeepers(docs: DataFrame, idCol: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b",
-      algo: (DataFrame, String, String) => DataFrame =
-        components(_, _, _)): DataFrame = {
-    val comp = algo(pairs, aCol, bCol)
+      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val comp = components(pairs, aCol, bCol)
     docs.select(col(idCol).as("id"))
       .join(comp, Seq("id"), "left")
       .select(col("id").as(idCol), coalesce(col("comp"), col("id")).as("comp"))
@@ -852,20 +749,20 @@ object Dedup {
    * Equivalence to `nearDupKeepers(docs, idCol, minhashLshPairs(...))`,
    * relying on two invariants: (a) a representative is the MIN id of its
    * exact-duplicate group ([[minhashLshPairsCollapsed]]'s `min(__oid)`), and
-   * (b) every labeler emits comp = min id of the component. An expanded
+   * (b) [[components]] emits comp = min id of the component. An expanded
    * component is the union of the member groups of one representative
    * component, so its min id = min over its groups' mins = min over its
    * representatives = the representative component's label; a group whose
    * rep sits in no rep pair is either a pure exact-dup clique (expanded
    * comp = its rep — `coalesce(comp, __rid)` below) or a singleton (comp =
-   * its own id = its rep). Pinned exhaustively against the expanded form in
-   * DedupSpec.
+   * its own id = its rep). TrainingOpsSpec checks it against the expanded
+   * form on a corpus of exact-dup groups, near-dup families and singletons,
+   * for both stores.
    */
   def nearDupKeepersCollapsed(docs: DataFrame, idCol: String,
       repPairs: DataFrame, members: DataFrame,
-      algo: (DataFrame, String, String) => DataFrame =
-        components(_, _, _)): DataFrame = {
-    val repComp = algo(repPairs, "id_a", "id_b")
+      store: Store = Store.Local): DataFrame = {
+    val repComp = components(repPairs, store = store)
     val full = members
       .join(repComp.withColumnRenamed("id", "__rid"), Seq("__rid"), "left")
       .select(col("__oid").as("id"), coalesce(col("comp"), col("__rid")).as("comp"))

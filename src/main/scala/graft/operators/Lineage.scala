@@ -32,13 +32,19 @@ object Lineage {
         org.apache.spark.sql.types.StructField("unit_key",
           org.apache.spark.sql.types.StringType))))
 
-  /** Completed unit keys from the ledger (empty-safe). */
+  /** Completed unit keys from the ledger: none when the ledger does not
+    * exist yet. Any other read failure (a corrupt or foreign ledger) is an
+    * error, never a silent full re-run. */
   def completedKeys(spark: SparkSession, ledgerPath: String): DataFrame = {
-    val empty = emptyKeys(spark)
-    try {
+    val path = new org.apache.hadoop.fs.Path(ledgerPath)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      emptyKeys(spark)
+    else {
       val df = spark.read.parquet(ledgerPath)
-      if (df.columns.contains("unit_key")) df.select("unit_key").distinct() else empty
-    } catch { case _: Throwable => empty }
+      require(df.columns.contains("unit_key"),
+        s"$ledgerPath is not a lineage ledger (columns: ${df.columns.mkString(", ")})")
+      df.select("unit_key").distinct()
+    }
   }
 
   /** Work rows whose unit key has no ledger entry yet (exact-resume filter). */

@@ -28,13 +28,6 @@ object MesoMega {
 
   final val BearingDiffThreshold = 45.0 // addMesoLevelMetadata.js:11
 
-  def directionName(code: Int): String = code match {
-    case Northbound => "NORTHBOUND"
-    case Eastbound => "EASTBOUND"
-    case Southbound => "SOUTHBOUND"
-    case Westbound => "WESTBOUND"
-  }
-
   /** F11 with the observed `||` quirk (parity=true): any bearing outside
     * the northbound wedge returns EASTBOUND. parity=false gives the
     * intended quadrants. */

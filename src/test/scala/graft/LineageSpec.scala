@@ -104,4 +104,17 @@ class LineageSpec extends AnyFunSuite {
     assert(graft.sources.SnapTable.scan(spark, led2, asOf = Some(1))
       .select("unit_key").distinct().count() == 2)
   }
+
+  test("a corrupt ledger is an error, not a silent full re-run") {
+    val (res, led) = freshDirs()
+    // a missing ledger is the one empty case: nothing has run yet
+    assert(Lineage.completedKeys(spark, led).count() == 0)
+    Files.createDirectories(java.nio.file.Paths.get(led))
+    Files.write(java.nio.file.Paths.get(led, "part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](Lineage.completedKeys(spark, led).collect())
+    intercept[Exception](
+      Lineage.runIncremental(workUnits, "unit", res, led, "rerun")(process))
+    assert(!Files.exists(java.nio.file.Paths.get(res)), "no unit may re-run")
+  }
 }

@@ -542,29 +542,92 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(got.size == 25)
   }
 
-  test("componentsStar: 200-node chain (diameter 199) resolves in log²-" +
-    "bounded rounds; agrees with hash-min on a seeded random graph") {
+  test("components matches a driver-side union-find on chains and random graphs") {
     import graft.operators.Dedup
-    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.componentsStar(chain).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 200)
-    (1L to 200L).foreach(i => assert(got(i) == 1L, s"chain node $i"))
-    // seeded random graph: star contraction and hash-min must produce the
-    // exact same partition (both label each component with its min id)
-    val rnd = new scala.util.Random(42)
-    val pairs = Seq.fill(150)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
-      .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
-    val star = Dedup.componentsStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.components(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === prop)
+    def labels(pairs: Seq[(Long, Long)]): Map[Long, Long] =
+      Dedup.components(pairs.toDF("id_a", "id_b")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // chains defeat label propagation (diameter 199 and 299); the reversed
+    // one lists every edge high-to-low, so no round starts near the root
+    val chain = (1L until 200L).map(i => (i, i + 1))
+    val reversed = (300L until 1L by -1L).map(i => (i, i - 1))
+    // seeded random graphs, sparse (many small components) to dense (one
+    // giant component plus stragglers)
+    val random = Seq((42, 150, 120), (7, 60, 200), (11, 400, 150)).map {
+      case (seed, nEdges, nNodes) =>
+        val rnd = new scala.util.Random(seed)
+        Seq.fill(nEdges)((rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes).toLong))
+          .filter { case (a, b) => a != b }
+    }
+    for (pairs <- chain +: reversed +: random)
+      assert(labels(pairs) === unionFind(pairs), s"${pairs.take(3)}…")
+    assert(labels(chain).values.toSet == Set(1L))
     // string ids: lexicographic min becomes the representative
-    val sgot = Dedup.componentsStar(Seq(("c", "b"), ("b", "a"), ("x", "y"))
+    val sgot = Dedup.components(Seq(("c", "b"), ("b", "a"), ("x", "y"))
       .toDF("id_a", "id_b")).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sgot === Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+  }
+
+  /** Driver-side union-find reference labels: id → min id of its component. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // the smaller root always wins, so every root is its component's min
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(k => k -> find(k)).toMap
+  }
+
+  test("components releases every generation but the live one") {
+    import graft.operators.Dedup
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Dedup.components(chain).collect()
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after <= before + 1, s"persistent RDDs: $before before, $after after")
+  }
+
+  test("nearDupKeepersCollapsed equals nearDupKeepers over the expanded " +
+    "minhashLshPairs, with either generation store") {
+    import graft.operators.Dedup
+    // planted structure: exact-dup groups, near-dup families (one word
+    // swapped per member, some members also copied exactly) and singletons
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 400).map(i => s"w${i}x${rnd.nextInt(1000)}")
+    def text(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    def edit(t: String) = {
+      val ws = t.split(" "); ws(rnd.nextInt(ws.length)) = text(1); ws.mkString(" ")
+    }
+    val exactGroups = Seq.fill(4)(text(60)).flatMap(t => Seq.fill(2 + rnd.nextInt(3))(t))
+    val families = Seq.fill(5)(text(60)).flatMap { t =>
+      val members = Seq.fill(3)(edit(t))
+      t +: members :+ members.head
+    }
+    val singletons = Seq.fill(12)(text(60))
+    val texts = rnd.shuffle(exactGroups ++ families ++ singletons)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong * 3 + 5, t) }
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val expanded = rows(Dedup.nearDupKeepers(docs, "doc_id",
+      Dedup.minhashLshPairs(docs, "doc_id", "text")))
+    val (repPairs, members) = Dedup.minhashLshPairsCollapsed(docs, "doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("collapsed_state").toString
+    for (store <- Seq(Dedup.Store.Local, Dedup.Store.Durable(root)))
+      assert(rows(Dedup.nearDupKeepersCollapsed(docs, "doc_id", repPairs,
+        members, store)) == expanded, s"store $store")
+    // the corpus really exercises every branch of the equivalence
+    val sizes = expanded.groupBy(_._2).values.map(_.size).toSeq
+    assert(expanded.size == texts.size)
+    assert(sizes.count(_ == 1) >= singletons.size)
+    assert(sizes.count(_ >= 5) == 5, s"family sizes: ${sizes.sorted}")
+    assert(repPairs.count() > 0)
   }
 
   test("stopword_hits kernel matches the per-set filter(isInCollection) " +
@@ -614,19 +677,20 @@ class TrainingOpsSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("star_state").toString
     // adversarial 40-node chain — needs several contraction rounds
     val pairs = (0L until 39L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val expect = Dedup.componentsStar(pairs).collect()
+    val expect = Dedup.components(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val store = Dedup.Store.Durable(root)
     // simulate a driver death after every single round: each call is a
     // fresh "driver" that resumes from the durable state and runs ONE round
     var calls = 0
-    while (!Dedup.componentsStarConverged(spark, root) && calls < 40) {
-      Dedup.componentsStarResumable(pairs, root, roundsThisRun = 1)
+    while (!store.converged(spark) && calls < 40) {
+      Dedup.components(pairs, store = store.copy(roundsThisRun = 1))
       calls += 1
     }
-    assert(Dedup.componentsStarConverged(spark, root), s"after $calls calls")
+    assert(store.converged(spark), s"after $calls calls")
     // a converged state returns the final labels without running any round
     val vDone = SnapTable.currentVersion(spark, root).get
-    val got = Dedup.componentsStarResumable(pairs, root).collect()
+    val got = Dedup.components(pairs, store = store).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(SnapTable.currentVersion(spark, root).contains(vDone),
       "a call on a converged state must not commit new rounds")
