@@ -1,127 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.{SparkConf, SparkContext}
 
 /**
- * Two-cluster-size scaling evidence (BASELINE.json north_rule): run the
- * IDENTICAL conflation job on IDENTICAL deterministic input at N and 4N
- * parallelism (local[8] vs local[32] — the sandbox stand-in for N and 4N
- * executors per BASELINE.md). Each invocation measures ONE parallelism
- * level in a fresh JVM (same-JVM back-to-back sessions contaminate each
- * other through heap state); tools/scaling_bench.sh runs both and computes
- * efficiency = (T_N / T_4N) / 4.
+ * Scaling evidence for the north rule (BASELINE.json): the identical
+ * conflation job on identical deterministic input, one parallelism level
+ * per fresh JVM (back-to-back sessions in one JVM contaminate each other
+ * through heap state). `tools/scaling.sh` runs the levels, asserts equal
+ * segment and tile counts across every run, and reports the efficiency of
+ * the per-level medians, (T_N / T_kN) / k.
  *
- * Usage: sbt "runMain graft.ScalingBench <cpus> [nPages] [nRoads]"
+ * The session is [[Bench.buildSession]] (tmpfs local dir, stale-dir wipe,
+ * shuffle partitions = cpus) with AQE off: adaptive replanning is
+ * driver-serial work, so every certified level ran without it.
+ *
+ * `master` defaults to `local[cpus]`. Any other master (the
+ * `local-cluster[W,C,MB]` that `tools/scaling.sh --cluster` submits: W
+ * separate executor JVMs of C cores) is started first, so that the
+ * session builder's `getOrCreate` joins it instead of overriding it with
+ * `local[cpus]`; its local dirs are then the deployment's, not the tmpfs
+ * dir the builder wipes.
+ *
+ * Usage: ScalingBench <cpus> [pages] [roads] [master]
  */
 object ScalingBench {
 
-  def run(cpus: Int, nPages: Long, nRoads: Int): (Long, Long, Double) = {
-    val spark = session(cpus)
-    try Bench.conflationThroughput(spark, nPages, nRoads)
-    finally spark.stop()
-  }
-
-  /**
-   * Warm-up and measurement INSIDE one session — executor-JIT parity for
-   * local-cluster masters (`SPARK_GRAFT_WARM_IN_SESSION=1`). In thread
-   * mode the warm-up session and the measured session share one JVM, so
-   * the measured run executes JIT-warm; under a local-cluster master a
-   * session's executors DIE with it, a separate warm-up session warms
-   * nothing, and the measured run pays the full interpreter/C2 ramp on
-   * every fresh executor JVM (~2.5× at 6.4M observed). Running the
-   * small-scale warm-up through the SAME session's executors restores the
-   * discipline the thread-mode protocol already has; the measured call is
-   * identical ([[Bench.conflationThroughput]] clears SQL caches first).
-   */
-  def runShared(cpus: Int, nPages: Long, nRoads: Int): (Long, Long, Double) = {
-    val spark = session(cpus)
-    try {
-      Bench.conflationThroughput(spark, 2000, 200)
-      Bench.conflationThroughput(spark, nPages, nRoads)
-    } finally spark.stop()
-  }
-
-  private def session(cpus: Int): org.apache.spark.sql.SparkSession = {
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus.toString)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp")
-    // on tmpfs, leaked shuffle dirs from killed runs are leaked RAM that
-    // degrades this measurement — scaling runs are exclusive, so anything
-    // already there is stale (same rationale as Bench.buildSession)
-    if (localDir.startsWith("/dev/shm")) {
-      val d = new java.io.File(localDir); d.mkdirs(); Bench.wipeStale(d)
-    }
-    // SPARK_GRAFT_MASTER overrides the in-process local[cpus] master —
-    // the multi-executor literal: `local-cluster[W,C,MB]` spawns W separate
-    // executor JVMs with C cores each, so the same job runs with real
-    // executor boundaries (serialized task dispatch, remote shuffle fetch,
-    // per-executor heaps) instead of threads sharing one JVM. Used by
-    // tools/local_cluster_scaling.sh for the north rule's "multi-executor
-    // cluster" phrasing; `cpus` stays the partition/reporting count.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESS", "true"))
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // extra conf pass-through for measurement experiments, e.g.
-    // SPARK_GRAFT_EXTRA_CONF="spark.memory.offHeap.enabled=true;spark.memory.offHeap.size=16g"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("SPARK_GRAFT_STAGE_REPORT")) addStageReport(spark)
-    spark
-  }
-
-  /** Opt-in per-stage diagnostic (SPARK_GRAFT_STAGE_REPORT=1): stage wall
-    * time vs task-time median/max exposes where a parallelism level loses
-    * efficiency — taskMax >> taskMed is a straggler (partition skew), stage
-    * wall >> taskMax is scheduler/serial gap, and total-stage-wall far under
-    * job wall is driver-side serial work between stages. Diagnostic only;
-    * certified brackets run without it. */
-  def addStageReport(spark: SparkSession): Unit =
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      private val tasks =
-        scala.collection.concurrent.TrieMap.empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val buf = tasks.getOrElseUpdate(t.stageId, scala.collection.mutable.ArrayBuffer.empty[Long])
-        buf.synchronized { buf += t.taskInfo.duration }
-      }
-      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = s.stageInfo
-        val ds = tasks.remove(si.stageId).map(b => b.synchronized(b.toArray.sorted)).getOrElse(Array.empty[Long])
-        val wall = (for { sub <- si.submissionTime; c <- si.completionTime } yield c - sub).getOrElse(0L)
-        val med = if (ds.nonEmpty) ds(ds.length / 2) else 0L
-        val mx = if (ds.nonEmpty) ds.last else 0L
-        val sum = ds.sum
-        val tm = si.taskMetrics
-        val shRead = tm.shuffleReadMetrics.totalBytesRead / 1e6
-        val shWrite = tm.shuffleWriteMetrics.bytesWritten / 1e6
-        val spill = (tm.memoryBytesSpilled + tm.diskBytesSpilled) / 1e6
-        val gc = tm.jvmGCTime / 1000.0
-        System.err.println(
-          f"[stage] id=${si.stageId}%4d tasks=${ds.length}%5d wall=${wall / 1000.0}%8.2fs " +
-            f"taskMed=${med / 1000.0}%7.2fs taskMax=${mx / 1000.0}%7.2fs cpuSum=${sum / 1000.0}%8.2fs " +
-            f"shR=${shRead}%8.1fMB shW=${shWrite}%8.1fMB spill=${spill}%8.1fMB gc=${gc}%6.2fs " +
-            f"name=${si.name.takeWhile(_ != '\n')}")
-      }
-    })
-
   /** Aggregate /proc/stat cpu jiffies (user nice system idle iowait irq
-    * softirq steal ...). Guest-visible host contention — steal — is the one
-    * signal that distinguishes "this box was quiet" from "the hypervisor
-    * taxed the run": the r4 6.4M re-certification measured local[2] 15%
-    * faster than r3's certified window with local[8] reproduced to 1.6%,
-    * an asymmetry only attributable to ambient host state during the
-    * 39-minute N leg. Recording the tax makes every future level
-    * self-documenting. */
+    * softirq steal ...). Steal is the one signal that tells "this box was
+    * quiet" from "the hypervisor taxed the run", so every run records it. */
   private def cpuStat(): Array[Long] = {
     val src = scala.io.Source.fromFile("/proc/stat")
     try src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
@@ -130,28 +36,33 @@ object ScalingBench {
 
   def main(args: Array[String]): Unit = {
     // the JSON line below is f-interpolated; a comma-decimal default locale
-    // would make it unparseable by the harness scripts
+    // would make it unparseable by tools/scaling.sh
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val cpus = args(0).toInt
     val nPages = if (args.length > 1) args(1).toLong else 400000L
     val nRoads = if (args.length > 2) args(2).toInt else 16000
-    val warmShared = sys.env.contains("SPARK_GRAFT_WARM_IN_SESSION")
-    // warm-up (JIT + codegen caches) at small scale, same parallelism —
-    // in its own session for the thread-mode protocol, in the MEASURED
-    // session under a local-cluster master (see runShared)
-    if (!warmShared) run(cpus, 2000, 200)
-    val s0 = cpuStat()
-    val (segs, tiles, sec) =
-      if (warmShared) runShared(cpus, nPages, nRoads)
-      else run(cpus, nPages, nRoads)
-    val s1 = cpuStat()
-    val d = s1.zip(s0).map { case (a, b) => (a - b).toDouble }
-    val total = math.max(d.sum, 1.0)
-    val stealPct = if (d.length > 7) d(7) / total * 100 else 0.0
-    val sysPct = if (d.length > 2) d(2) / total * 100 else 0.0
-    println(f"""{"cpus":$cpus,"n_pages":$nPages,"n_roads":$nRoads,""" +
-      f""""segments":$segs,"tiles":$tiles,"sec":$sec%.2f,""" +
-      f""""rows_per_sec":${segs / sec}%.1f,"tiles_per_sec":${tiles / sec}%.1f,""" +
-      f""""steal_pct":$stealPct%.1f,"sys_pct":$sysPct%.1f}""")
+    val master = if (args.length > 3) args(3) else s"local[$cpus]"
+    if (master != s"local[$cpus]")
+      SparkContext.getOrCreate(new SparkConf().setMaster(master)
+        .setAppName("graft.ScalingBench").set("spark.ui.enabled", "false"))
+    val spark = Bench.buildSession(cpus.toString)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.sparkContext.setLogLevel("WARN")
+    try {
+      // warm-up (JIT, codegen caches) at small scale through the measured
+      // session's own executors: under a local-cluster master the executors
+      // die with their session, so a separate warm-up session warms nothing
+      Bench.conflationThroughput(spark, 2000, 200)
+      val s0 = cpuStat()
+      val (segs, tiles, sec) = Bench.conflationThroughput(spark, nPages, nRoads)
+      val d = cpuStat().zip(s0).map { case (a, b) => (a - b).toDouble }
+      val total = math.max(d.sum, 1.0)
+      val stealPct = if (d.length > 7) d(7) / total * 100 else 0.0
+      val sysPct = if (d.length > 2) d(2) / total * 100 else 0.0
+      println(f"""{"cpus":$cpus,"n_pages":$nPages,"n_roads":$nRoads,""" +
+        f""""segments":$segs,"tiles":$tiles,"sec":$sec%.2f,""" +
+        f""""rows_per_sec":${segs / sec}%.1f,"tiles_per_sec":${tiles / sec}%.1f,""" +
+        f""""steal_pct":$stealPct%.1f,"sys_pct":$sysPct%.1f}""")
+    } finally spark.stop()
   }
 }

@@ -252,6 +252,8 @@ object SmokeWorld {
     s"$prefix${v >> 20}_${v & 0xfffff}"
   }
 
+  private def rmTree(d: java.io.File): Unit = { Bench.wipeStale(d); d.delete(): Unit }
+
   private val TilesetVersion = 1
 
   /** Render the synth network ONCE per auxDir as a real wire-format tileset
@@ -261,10 +263,7 @@ object SmokeWorld {
     val marker = new java.io.File(target, s"_GRAFT_TILESET_V$TilesetVersion")
     val hasTiles = Option(target.listFiles()).exists(_.exists(_.getName.endsWith(".pbf")))
     if (marker.exists() && hasTiles) return target.getPath
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (target.exists()) rm(target)
+    if (target.exists()) rmTree(target)
     graft.sources.ShstTiles.writeTileset(
       ConflationPipeline.references(spark, NRoads), target.getPath,
       wayIdEnc = encSynthId, nodeIdEnc = encSynthId)
@@ -307,11 +306,8 @@ object SmokeWorld {
   def snapTableFixture(spark: SparkSession, sfDir: String): String = synchronized {
     val root = s"$auxDir/aux_snaptable_${new java.io.File(sfDir).getName}"
     if (graft.sources.SnapTable.currentVersion(spark, root).contains(2)) return root
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     val d = new java.io.File(root)
-    if (d.exists()) rm(d) // partial build (crash between commits): rebuild
+    if (d.exists()) rmTree(d) // partial build (crash between commits): rebuild
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     graft.sources.SnapTable.append(
       docs.filter(col("doc_id") % 4 < 2).repartitionByRange(4, col("doc_id")),
@@ -331,10 +327,7 @@ object SmokeWorld {
     synchronized {
       val tiles = writeTilesetFixture(spark)
       val dest = new java.io.File(s"$auxDir/aux_scrape_dest")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      if (dest.exists()) rm(dest)
+      if (dest.exists()) rmTree(dest)
       dest.mkdirs()
       new java.io.File(tiles).listFiles()
         .filter(_.getName.endsWith(".geometry.8.pbf"))

@@ -143,5 +143,40 @@ class ConflationPipelineSpec extends AnyFunSuite {
     assert(misordered.count() == 0)
   }
 
+  test("segments and zoom-12 tiles are identical at any shuffle partitioning, AQE on or off") {
+    // the scaling certificates compare runs at different parallelism with
+    // AQE off; this pins that the rows themselves, not just their counts,
+    // do not depend on either setting. Segments compare exactly. A tile's
+    // total_km is a double sum whose last bits follow the summation order,
+    // which the partitioning sets, so tile doubles compare at 10
+    // significant digits, the precision perfbench digests doubles at.
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    def tileRow(r: org.apache.spark.sql.Row): String = r.toSeq.map {
+      case d: Double => BigDecimal(d).round(new java.math.MathContext(10)).toString
+      case v => String.valueOf(v)
+    }.mkString(",")
+    def outputs(parts: Int, aqe: Boolean): (Seq[String], Seq[String]) = {
+      spark.conf.set(keys(0), parts.toLong)
+      spark.conf.set(keys(1), aqe)
+      val segs = ConflationPipeline.run(spark, NPages, NRoads)
+      (segs.toDF().collect().map(_.toString).toSeq.sorted,
+        ConflationPipeline.tiles(segs, 12).collect().map(tileRow).toSeq.sorted)
+    }
+    try {
+      val runs = for (parts <- Seq(1, 3, 7); aqe <- Seq(false, true))
+        yield (parts, aqe) -> outputs(parts, aqe)
+      val (segs0, tiles0) = runs.head._2
+      assert(segs0.nonEmpty && tiles0.nonEmpty)
+      runs.tail.foreach { case (conf, (segs, tiles)) =>
+        assert(segs == segs0, s"segments differ at (partitions, aqe) = $conf")
+        assert(tiles == tiles0, s"zoom-12 tiles differ at (partitions, aqe) = $conf")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private def Window = org.apache.spark.sql.expressions.Window
 }
